@@ -5,9 +5,11 @@ leave the tools silently measuring under different rules (r10
 self-review finding: the idiom had been copy-pasted three times).
 
 The discipline (bench.py's, unchanged):
-- warmup: one parquet-footer read + one Arrow/pandas-UDF wave, so the
-  first measured query absorbs neither JVM/session startup nor the
-  one-time Python-worker fork (~2 s);
+- warmup: one parquet-footer read + one Arrow/pandas-UDF wave of one
+  task per core (``defaultParallelism``), so the first measured query
+  absorbs neither JVM/session startup nor the one-time Python-worker
+  fork (~2 s) — one task per core forks every worker a full-width UDF
+  stage reuses, and more tasks would only pay per-task worker setup;
 - timing: full materialization through the NOOP sink (every output
   column computed, no rows to the driver — `.count()` lets Catalyst
   legally eliminate the expensive stages, measured in r4);
@@ -93,7 +95,8 @@ def warm_session(spark: SparkSession, sf_dir: str) -> None:
     # no type hints: `from __future__ import annotations` stringifies
     # them, which the pandas_udf hint inference can't read
     _warm = pandas_udf(lambda s: s, "long", PandasUDFType.SCALAR)
-    spark.range(32).repartition(32).select(_warm("id")).collect()
+    n = spark.sparkContext.defaultParallelism
+    spark.range(n).repartition(n).select(_warm("id")).collect()
 
 
 def time_noop_min(

@@ -1,0 +1,29 @@
+"""Per-context memo dicts that die with their context.
+
+The driver-side memos (parquet scan roots and split counts in
+sources/tables.py, corpus-independent Column trees in
+plans/exprmemo.py) hold py4j references that are only valid for the
+SparkSession or SparkContext that built them. Keying a module-level
+dict on a raw ``id()`` of that object is not enough: once the object is
+collected, CPython may hand the same id to a new session, which would
+then be served the dead one's entries. ``context_memo`` keys on the id
+too, but registers a ``weakref.finalize`` that drops the owner's dicts
+when it is collected, which always happens before its id can be reused.
+"""
+
+from __future__ import annotations
+
+import weakref
+
+_MEMOS: dict[int, dict[str, dict]] = {}
+
+
+def context_memo(owner, name: str) -> dict:
+    """The ``name`` memo dict of one live SparkSession or SparkContext
+    (any weak-referenceable object), created empty on first use."""
+    key = id(owner)
+    memos = _MEMOS.get(key)
+    if memos is None:
+        _MEMOS[key] = memos = {}
+        weakref.finalize(owner, _MEMOS.pop, key, None)
+    return memos.setdefault(name, {})

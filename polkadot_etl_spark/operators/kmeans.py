@@ -55,6 +55,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polkadot_etl_spark.sources.tables import local_frame
+
 # Above this k the literal-inline SQL form is replaced by the
 # broadcast-centroid join form (O(1) expression size in k). 64×64 ≈ 4k
 # literal terms is comfortably inside codegen limits; beyond that the
@@ -113,7 +115,8 @@ def assign_nearest_broadcast(
     the literal form keeps it, and duplicate ids would fan out. The
     same contract a vector primary key already satisfies."""
     spark = df.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(j, [float(v) for v in c]) for j, c in enumerate(centroids)],
         "cent_cid INT, cent_vec ARRAY<DOUBLE>",
     )
@@ -234,7 +237,8 @@ def _sq_dist_to_nearest(df: DataFrame, centroids: list[list[float]],
     """df + ``d2`` = squared L2 distance to the nearest current centroid
     (broadcast-centroid form, O(1) expression size in |centroids|)."""
     spark = df.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(j, [float(v) for v in c]) for j, c in enumerate(centroids)],
         "cent_cid INT, cent_vec ARRAY<DOUBLE>",
     )

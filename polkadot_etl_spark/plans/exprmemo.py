@@ -11,9 +11,10 @@ each corpus-independent tree is built ONCE per (SparkContext, site) and
 reused — plan machinery, not result caching: every invocation still
 assembles, analyzes and executes its own plan from the parquet inputs.
 
-Keyed by the live SparkContext's Python object identity so a restarted
-JVM can never be served stale py4j references. Cached trees must be
-built from NAME-based references only (F.col/string names, F.lit
+Held in the live SparkContext's ``context_memo`` (polkadot_etl_spark/
+memo.py), so a restarted JVM can never be served stale py4j references,
+even when the new context recycles the old one's id(). Cached trees must
+be built from NAME-based references only (F.col/string names, F.lit
 constants) — never from a concrete DataFrame's resolved attributes.
 """
 
@@ -21,13 +22,12 @@ from __future__ import annotations
 
 from pyspark import SparkContext
 
-_EXPR_CACHE: dict = {}
+from polkadot_etl_spark.memo import context_memo
 
 
 def expr_cache(key, build):
-    sc = SparkContext._active_spark_context
-    full = (id(sc), key)
-    got = _EXPR_CACHE.get(full)
+    memo = context_memo(SparkContext._active_spark_context, "expr")
+    got = memo.get(key)
     if got is None:
-        got = _EXPR_CACHE[full] = build()
+        got = memo[key] = build()
     return got

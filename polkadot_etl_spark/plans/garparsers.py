@@ -31,9 +31,10 @@ canonical interior key.
 
 from __future__ import annotations
 
-from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from polkadot_etl_spark.sources.tables import local_frame
 
 # ---------------------------------------------------------------------------
 # Corpus-independent expression memo (r14, VERDICT #4 / guide §1.2).
@@ -50,14 +51,11 @@ from pyspark.sql import functions as F
 # assembles, analyzes and executes its own plan from the parquet
 # inputs.
 #
-# Keyed by the live SparkContext's Python object identity so a
-# restarted JVM can never be served stale py4j references.
+# Held per live SparkContext so a restarted JVM can never be served
+# stale py4j references.
 # ---------------------------------------------------------------------------
 
-from polkadot_etl_spark.plans.exprmemo import (  # noqa: E402
-    _EXPR_CACHE,
-    expr_cache as _expr_cache,
-)
+from polkadot_etl_spark.plans.exprmemo import expr_cache as _expr_cache  # noqa: E402
 
 
 def _cleaned_asset_id(raw: Column) -> Column:
@@ -377,7 +375,8 @@ class GarParser:
             # system.properties seeding: native assets enter the local
             # map symbol-keyed with no assets-pallet id
             # (getSystemProperties, common_chainparser.js:80-95)
-            native = gar_entries.sparkSession.createDataFrame(
+            native = local_frame(
+                gar_entries.sparkSession,
                 [
                     (None, '{"Token":"%s"}' % s, s, s, d)
                     for s, d in self.native_tokens
@@ -455,7 +454,7 @@ class StatemintGarParser(GarParser):
             )
             for aid, pallet in self.MANUAL
         ]
-        return spark.createDataFrame(rows, "asset_id long, multilocation string")
+        return local_frame(spark, rows, "asset_id long, multilocation string")
 
 
 class HydraGarParser(GarParser):
@@ -788,7 +787,8 @@ class AstarGarParser(GarParser):
         loc = (
             '{"parents": 1, "interior": {"X1": [{"Parachain": %d}]}}' % self.para_id
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(s, loc) for s, _ in self.native_tokens[:1]],
             "symbol string, multilocation string",
         )

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polkadot_etl_spark.functions.evm import ERC20_SELECTORS, compute_selector
+from polkadot_etl_spark.sources.tables import local_frame
 
 # (chain_id, address, name, abi) — precompiles/README.md:5-14 (moonbeam,
 # matching docs.moonbeam.network) and :20-33 (astar, matching
@@ -78,7 +79,8 @@ def precompile_dim(spark: SparkSession, chain_id: int | None = None) -> DataFram
     """The registry as a broadcast-ready dim (the contractabi rows the
     reference loads once)."""
     rows = [r for r in PRECOMPILES if chain_id is None or r[0] == chain_id]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "chain_id int, address string, precompile_name string, abi string"
     )
 

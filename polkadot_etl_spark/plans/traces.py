@@ -11,6 +11,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from polkadot_etl_spark.sources.tables import local_frame
+
 
 def account_change_events(traces: DataFrame) -> DataFrame:
     """W1: per-address ordered diff detection over System.Account traces.
@@ -125,7 +127,8 @@ def storage_keys_dim(spark, entries: list[tuple[str, str, str]]) -> DataFrame:
         )
         for p, s, vt in entries
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "prefix: string, section: string, storage: string, value_type: string"
     )
 

@@ -30,7 +30,7 @@ from polkadot_etl_spark.operators.srp import (
 from polkadot_etl_spark.queries.llmdata import _DUCK_BUCKET as _LSH_DUCK_BUCKET
 from polkadot_etl_spark.queries.llmdata import _sq_norm as _sqn
 from polkadot_etl_spark.queries.registry import QUERIES, query
-from polkadot_etl_spark.sources.tables import fan_out_scan, load_table
+from polkadot_etl_spark.sources.tables import fan_out_scan, load_table, local_frame
 
 SEMDEDUP_K = 45  # k-means cells ~ sqrt(N) (seeded, like ivf_centroid_update)
 SEMDEDUP_THR = 0.3  # cosine gate (synthetic vectors: selects top tail)
@@ -719,7 +719,8 @@ vocab AS (SELECT w, COUNT(*) AS cnt FROM wd WHERE len(w) >= 2 GROUP BY w),
 )
 def bpe_merge_train_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, _seg = _bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "step INT, lhs STRING, rhs STRING, merged STRING, pair_count BIGINT"
     )
 
@@ -2193,7 +2194,8 @@ def _ivf_trained_parts(spark: SparkSession, sf_dir: str):
         disp, vec_col="demb", id_col="vec_id", k=5, max_iter=10, tol=0.0
     )
 
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(j, c) for j, c in enumerate(centroids)], "cell INT, cvec ARRAY<DOUBLE>"
     )
     q = disp.where(vid < 8).select(
@@ -3024,7 +3026,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(skc.withColumn("method", F.lit("sketch")))
     )
 
-    methods = spark.createDataFrame([("lsh",), ("ivf",), ("sketch",)], "method STRING")
+    methods = local_frame(spark, [("lsh",), ("ivf",), ("sketch",)], "method STRING")
     grid = tr_n.crossJoin(F.broadcast(methods))
     return (
         grid.join(F.broadcast(hits), ["method", "q_id"], "left")
@@ -5324,7 +5326,8 @@ def _bm25_parts(
     # collect once so the kept-term dim and the drop accounting share one
     # evaluation (two lazy consumers would re-run the lexicon count) and
     # both downstream joins broadcast a plan-time LocalRelation
-    q_ann = spark.createDataFrame(
+    q_ann = local_frame(
+        spark,
         term_df.join(F.broadcast(q), "term")
         .crossJoin(F.broadcast(tot))
         .select("query_id", "term", "df", "n", "t")
@@ -6776,8 +6779,9 @@ def streaming_neardedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         _shutil.rmtree(work, ignore_errors=True)
     # pandas renders the nullable matched_id as float NaN, which the
-    # row-wise createDataFrame verifier rejects for LongType (and the
-    # Int64 extension dtype hits the same path) — convert explicitly
+    # row verifier (local_frame's, the list path's) rejects for LongType
+    # (and the Int64 extension dtype hits the same path) — convert
+    # explicitly
     import pandas as _pd
 
     rows = [
@@ -6790,7 +6794,7 @@ def streaming_neardedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in pdf.itertuples(index=False)
     ]
-    band_rows = spark.createDataFrame(rows, BAND_OUT_SCHEMA)
+    band_rows = local_frame(spark, rows, BAND_OUT_SCHEMA)
     return consolidate_verdicts(band_rows).select(
         "doc_id",
         "near_dup_of",
@@ -7470,7 +7474,8 @@ def embedding_top_pc_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         x = [_trunc_div(v, dv) for v in y]
     first_nz = next((v for v in x if v != 0), 1)
     sg = -1 if first_nz < 0 else 1
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(d + 1, x[d] * sg, n_vectors, PC_ITERS) for d in range(PC_DIMS)],
         "dim INT, pc_micro LONG, n_vectors LONG, n_iter INT",
     )
@@ -7625,7 +7630,8 @@ def embedding_abtt_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in lab_rows
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out, "label INT, n_vectors LONG, pc_share_ppm LONG"
     )
 
@@ -7882,7 +7888,8 @@ def embedding_abtt_isotropy_delta(spark: SparkSession, sf_dir: str) -> DataFrame
     cr = _abtt_centered(spark, sf_dir).localCheckpoint(eager=True)
     x, x2, x_lit = _ABTT_DIRECTION
     mb, ma = _abtt_cent_ledgers(cr)
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(lab, mb[lab], ma[lab]) for lab in sorted(mb)],
         "label INT, mb ARRAY<BIGINT>, ma ARRAY<BIGINT>",
     )
@@ -7914,7 +7921,8 @@ def embedding_abtt_isotropy_delta(spark: SparkSession, sf_dir: str) -> DataFrame
         after = int(row["sdt2a"]) * 1_000_000 // max(m2a * int(row["sc2a"]), 1)
         resid = int(row["sp2"]) * 1_000_000 // max(x2 * int(row["sc2a"]), 1)
         out.append((lab, int(row["n"]), before, after, after - before, resid))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "label INT, n_vectors LONG, share_before_ppm LONG,"
         " share_after_ppm LONG, delta_ppm LONG, residual_pc_ppm LONG",
@@ -8309,7 +8317,8 @@ def ann_ivf_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
         row + (int(n_iter),)
         for row in _ivf_card_rows(s_std, n_std, s_new, n_new)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "cell INT, n_standing LONG, n_new LONG, growth_ppm LONG,"
         " drift_ppm LONG, retrain BOOLEAN, n_iter INT",
@@ -8687,7 +8696,8 @@ def corpus_daily_increment_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         int(fun_row["n_kept"]),
     )
     out = [row + fun for row in _ivf_card_rows(s_std, n_std, s_new, n_new)]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "cell INT, n_standing LONG, n_new LONG, growth_ppm LONG,"
         " drift_ppm LONG, retrain BOOLEAN, n_streamed LONG,"
@@ -8914,7 +8924,8 @@ def unimax_mixture_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         # must not ZeroDivisionError on arbitrary corpora)
         epochs_ppm = alloc * 1_000_000 // n_tok if n_tok > 0 else 0
         out.append((source, n_tok, cap, alloc, epochs_ppm, alloc == cap))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "source STRING, n_tokens LONG, cap_tokens LONG, alloc_tokens LONG,"
         " epochs_ppm LONG, capped BOOLEAN",
@@ -9077,7 +9088,8 @@ def mixture_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
          norm_sum[source] // DOREMI_STEPS)
         for source, n_words, loss, excess, m_ppm in stats
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "source STRING, n_words LONG, loss_micro_nats LONG,"
         " excess_micro_nats LONG, multiplier_ppm LONG,"
@@ -9437,7 +9449,8 @@ def _snm_neighbor_pairs(k: DataFrame) -> DataFrame:
             for j in range(lo, hi):
                 ghost_map.append((p, rn, pids[j]))
     if ghost_map:
-        gm = k.sparkSession.createDataFrame(
+        gm = local_frame(
+            k.sparkSession,
             ghost_map, "pid INT, rn INT, gpid INT"
         )
         ghosts = (

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from polkadot_etl_spark.queries.fmt import d_date, d_decsum, s_date, s_ts
 from polkadot_etl_spark.queries.registry import query
-from polkadot_etl_spark.sources.tables import fan_out_scan, load_table
+from polkadot_etl_spark.sources.tables import fan_out_scan, load_table, local_frame
 
 # Nested params for the utility:batch extrinsics — exercises the recursive
 # call-tree flatten inside dump_day (root + 2 leaf children = 3 call rows).
@@ -1238,7 +1238,8 @@ def xcm_message_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.from_json(instr_json, "array<string>")).alias("instruction"),
     )
     dim = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             _XCM_WEIGHT_DIM, "instruction: string, ref_time: long, reads: int, writes: int"
         )
     )
@@ -1705,7 +1706,8 @@ def xcmtransfers_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(ks, F.lit("-e5")).alias("eventID"),
     )
     chain_ids = [2000, 2001, 2002, 2003, 2010, 2011, 2012]
-    chains = spark.createDataFrame(
+    chains = local_frame(
+        spark,
         [(c, f"chain{c}", f"Chain {c}", c - 2000) for c in chain_ids],
         "chainID: long, id: string, chain_name: string, para_id: long",
     )
@@ -1958,7 +1960,8 @@ def xcm_messages_published(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("string").alias("xcmInteriorKeysUnregistered"),
     )
     chain_ids = [2000, 2001, 2002, 2003, 2010, 2011, 2012]
-    chains = spark.createDataFrame(
+    chains = local_frame(
+        spark,
         [(c, f"chain{c}", c - 2000) for c in chain_ids],
         "chainID: long, id: string, para_id: long",
     )
@@ -3008,7 +3011,8 @@ def _statemint_gar_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("{"), sym_part, name_part, F.lit('"decimals":'), dec_json, F.lit("}")
         ).alias("value"),
     )
-    usdt = spark.createDataFrame(
+    usdt = local_frame(
+        spark,
         [('["1,984"]', '{"symbol":"USDT","name":"Tether USD","decimals":6}')],
         "key_args string, value string",
     )
@@ -3153,7 +3157,8 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     ks = k.cast("string")
     key_args = F.concat(F.lit('["'), ks, F.lit('"]'))
     hy_gar = _hydra_gar_entries(spark, sf_dir).unionByName(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [('["900"]', '{"symbol":"xcUSDT","decimals":6}')],
             "key_args string, value string",
         )
@@ -3181,7 +3186,8 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(_x2(k + 3000, k))
     )
     hy_xc = nat.select(key_args.alias("key_args"), hy_xc_val.alias("value")).unionByName(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 # hydra's wrapper registration of AssetHub USDT → the same
                 # interior key as statemint's manual row (confidence 2)
@@ -3265,7 +3271,8 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit('","decimals":12}'),
         ).alias("value"),
     ).unionByName(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [('[{"ForeignAssetId":"1,900"}]',
               '{"name":"Acala FA","symbol":"AFA","decimals":12}')],
             "key_args string, value string",
@@ -3278,7 +3285,8 @@ def gar_chain_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
             _x2(ck + 4000, ck + 900).alias("value"),
         )
         .unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [('["1,900"]',
                   '{"parents":1,"interior":{"X2":[{"Parachain":5900},'
                   '{"GeneralIndex":99}]}}')],
@@ -3825,7 +3833,8 @@ def xcm_remote_transact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # destination EVM block txs: the generator plants the matching tx at
     # the precomputed derivative 'from' — the REAL pipeline must re-derive
     # the same account through the blake2 codec for the join to land
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [(j, d20, t) for j, _, t, d20 in _xt_fee_payers()],
         "j long, d20 string, tt string",
     )
@@ -4092,7 +4101,8 @@ def snapshots_assethub_stablecoins(spark: SparkSession, sf_dir: str) -> DataFram
             F.lit('{"balance":"'), F.format_number(raw, 0), F.lit('"}')
         ).alias("value"),
     )
-    asset_entries = spark.createDataFrame(
+    asset_entries = local_frame(
+        spark,
         [
             (
                 '["1984"]',
@@ -4584,7 +4594,8 @@ def gar_longtail_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
         k % 2 == 0, F.concat(F.lit('{"v1":'), _x2(k + 2600, k), F.lit("}"))
     ).otherwise(F.concat(F.lit('{"xcm":'), _x2(k + 2600, k), F.lit("}")))
     as_xc = pt.select(_keyed(pt).alias("key_args"), as_xc_val.alias("value")).unionByName(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             # id 999 absent from assets:metadata → unknown-asset skip
             [('["999"]', '{"parents":1,"interior":{"X1":{"Parachain":9999}}}')],
             "key_args string, value string",
@@ -4833,7 +4844,8 @@ def snapshots_dappstaking_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         null_b.alias("maintenance"),
     )
 
-    era_entries = spark.createDataFrame(
+    era_entries = local_frame(
+        spark,
         [(
             '{"totalLocked":"59853000000000000000000",'
             '"unlocking":"930000000000000000",'
@@ -4859,7 +4871,8 @@ def snapshots_dappstaking_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         null_b.alias("maintenance"),
     )
 
-    proto_entries = spark.createDataFrame(
+    proto_entries = local_frame(
+        spark,
         [(
             '{"era":"4,429","nextEraStart":"5,652,415",'
             '"periodInfo":{"number":7,"subperiod":"Voting",'
@@ -5406,7 +5419,7 @@ def snapshots_relay_opengov(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "supplier")
         .where(F.col("s_suppkey") < 30)
         .select(F.col("s_suppkey").cast("long").alias("k"))
-        .unionByName(spark.createDataFrame([(309,)], "k long"))
+        .unionByName(local_frame(spark, [(309,)], "k long"))
     )
     treas_entries = sup.select(*X["treas_cols"])
     treas_df = snap.treasury_proposals(treas_entries).select(*X["treas_sel"])
@@ -5418,7 +5431,8 @@ def snapshots_relay_opengov(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounty_df = snap.bounties(bounty_entries).select(*X["bounty_sel"])
 
     # computeTotalStaked era rollup (literal singleton frame)
-    singles = spark.createDataFrame(
+    singles = local_frame(
+        spark,
         [
             ("currentEra", "1477"),
             ("erasTotalStake", "8200000000000000000"),
@@ -5502,7 +5516,8 @@ def assethub_price_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(".125"),
     )
     feed = od.select(k.alias("line_no"), line.alias("line")).unionByName(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (0, "blockTime,asset,priceUSD,unused,volumeUSD,priceDOT"),
                 (3001, "1998-03-01 00:00:00.000 UTC,,1,x,2,3"),

@@ -10,8 +10,18 @@ replaces exactly that day — the Spark equivalent of
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DataType,
+    StructType,
+    _create_converter,
+    _make_type_verifier,
+)
+
+from polkadot_etl_spark.memo import context_memo
 
 TABLES = (
     "region",
@@ -36,24 +46,9 @@ TABLES = (
 # plan machinery, not result caching — every query still assembles,
 # analyzes and EXECUTES its own plan from the parquet files on disk
 # (nothing row-shaped is retained; the first build in any fresh JVM
-# pays full price). Keyed per live SparkSession (weak — a closed
-# session's frames are never served to a new one) + path.
-_SCAN_MEMO: "dict" = {}
-
-
-def _scan_memo_for(spark: SparkSession) -> dict:
-    import weakref
-
-    sess_key = id(spark)
-    entry = _SCAN_MEMO.get(sess_key)
-    if entry is None:
-        # prune on session GC so a recycled id() can never alias
-        _SCAN_MEMO[sess_key] = entry = {}
-        try:
-            weakref.finalize(spark, _SCAN_MEMO.pop, sess_key, None)
-        except TypeError:
-            pass
-    return entry
+# pays full price). Keyed per live SparkSession (its ``context_memo``,
+# polkadot_etl_spark/memo.py — a closed session's frames are never served
+# to a new one, even one that recycles its id()) + path.
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -70,9 +65,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     consumer sees one type. Session timezone is pinned to UTC so
     date/epoch math matches the oracle even when the caller's session
     wasn't built by session.py (re-pinned on EVERY call, memo hit or
-    not — the non-UTC-driver guard must hold per invocation)."""
+    not — the non-UTC-driver guard must hold per invocation).
+
+    The scan memo above returns the SAME DataFrame to every caller in a
+    session, which sets two constraints:
+
+    - the fixture directory must be immutable for the session's
+      lifetime: a rewritten directory is served the stale file listing;
+    - two loads of one table share exprIds, so join them by name or
+      ``USING`` (or alias each side), never ``df1[c] == df2[c]``, which
+      is an ambiguous self-join condition on one plan fragment."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    memo = _scan_memo_for(spark)
+    memo = context_memo(spark, "scan")
     key = (sf_dir, name)
     df = memo.get(key)
     if df is not None:
@@ -92,7 +96,38 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_SCAN_SPLITS_MEMO: dict[tuple[int, str, str], int] = {}
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A driver-side literal frame (dims, registry seeds, collected
+    summaries) as a plan-time ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` in classic PySpark
+    parallelizes the rows and pickles them through a Python ``map``, so
+    the frame plans as ``Scan ExistingRDD`` with an unknown size and
+    every execution runs one Python-worker task per default-parallelism
+    slice. Here the rows are verified and converted on the driver
+    exactly as that list path does (same type verifier, same internal
+    values, so mistyped rows raise the same errors), transposed into a
+    ``pyarrow.Table`` typed by ``to_arrow_schema``, and handed to
+    ``createDataFrame``, which builds a ``LocalRelation``: no Python
+    tasks, an exact size estimate, and projections and filters that
+    ``ConvertToLocalRelation`` folds at plan time. ``schema`` is a DDL
+    string or a ``StructType``; a zero-row input keeps its schema."""
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    verify = _make_type_verifier(struct)
+    convert = _create_converter(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(convert(row)))
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in internal], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -100,11 +135,10 @@ def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
     (SparkContext, path) — one .rdd planning round trip per table per
     JVM (no job runs; split packing is decided at planning time from
     file sizes and maxPartitionBytes/openCostInBytes)."""
-    key = (id(spark.sparkContext), sf_dir, name)
-    n = _SCAN_SPLITS_MEMO.get(key)
+    memo = context_memo(spark.sparkContext, "scan_splits")
+    n = memo.get((sf_dir, name))
     if n is None:
-        n = load_table(spark, sf_dir, name).rdd.getNumPartitions()
-        _SCAN_SPLITS_MEMO[key] = n
+        n = memo[(sf_dir, name)] = load_table(spark, sf_dir, name).rdd.getNumPartitions()
     return n
 
 

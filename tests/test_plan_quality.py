@@ -27,22 +27,64 @@ def _plan_of(spark, df) -> str:
     )
 
 
+def _python_rdd_leaves(df) -> list[str]:
+    """Executed-plan leaves whose RDD lineage runs Python: a
+    ``Scan ExistingRDD`` over a pickled Python RDD, which is what
+    ``spark.createDataFrame(<python list>)`` plans as — one Python-worker
+    task per slice on every execution. localCheckpoint leaves print as
+    ``Scan ExistingRDD`` too, but their lineage is cut at the checkpoint,
+    so they never match."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.inputPlan()
+    leaves = plan.collectLeaves()
+    found = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "RDDScanExec":
+            continue
+        if "PythonRDD" in leaf.rdd().toDebugString():
+            found.append(leaf.nodeName())
+    return found
+
+
+def test_python_rdd_leaf_check(spark):
+    """The leaf check flags a list-built frame, even under a join, and
+    passes the Arrow-built LocalRelation and a localCheckpoint of a
+    list-built frame."""
+    from polkadot_etl_spark.sources.tables import local_frame
+
+    listed = spark.createDataFrame([(1,)], "id long")
+    assert _python_rdd_leaves(listed) == ["Scan ExistingRDD"]
+    assert _python_rdd_leaves(spark.range(4).join(listed, "id")) == [
+        "Scan ExistingRDD"
+    ]
+    assert _python_rdd_leaves(local_frame(spark, [(1,)], "id long")) == []
+    assert _python_rdd_leaves(listed.localCheckpoint()) == []
+
+
 def test_no_row_at_a_time_python_anywhere(spark):
     """Registry-wide plan bans, checked in one planning pass:
     - BatchEvalPython (row-pickling Python) — Python must be
       Arrow-batched (ArrowEvalPython / FlatMapGroupsInPandas /
       MapInPandas);
+    - Python-RDD leaves (``_python_rdd_leaves``) — driver-side literal
+      frames must be LocalRelations (sources/tables.local_frame);
     - CartesianProduct — an unkeyed shuffled cross join is never the
       right 100 TB plan; small-side crosses must broadcast
       (BroadcastNestedLoopJoin) and everything else needs a key."""
-    offenders, cartesian = [], []
+    offenders, python_rdds, cartesian = [], [], []
     for name in sorted(QUERIES):
-        plan = _plan(spark, name)
+        df = QUERIES[name].build(spark, SF_DIR)
+        plan = _plan_of(spark, df)
         if "BatchEvalPython" in plan:
             offenders.append(name)
+        if _python_rdd_leaves(df):
+            python_rdds.append(name)
         if "CartesianProduct" in plan:
             cartesian.append(name)
     assert not offenders, f"row-at-a-time Python UDFs in: {offenders}"
+    assert not python_rdds, f"Python-RDD scan leaves in: {python_rdds}"
     assert not cartesian, f"non-broadcast cartesian products in: {cartesian}"
 
 
@@ -1950,23 +1992,26 @@ def test_fan_out_scan_gates_on_split_count(spark):
     shuffle. Simulated by seeding the memo the gate reads."""
     from polkadot_etl_spark.sources import tables as T
 
+    from polkadot_etl_spark.memo import context_memo
+
     dp = spark.sparkContext.defaultParallelism
-    key = (id(spark.sparkContext), SF_DIR, "documents")
+    memo = context_memo(spark.sparkContext, "scan_splits")
+    key = (SF_DIR, "documents")
     df = T.load_table(spark, SF_DIR, "documents")
-    saved = T._SCAN_SPLITS_MEMO.get(key)
+    saved = memo.get(key)
     try:
         # real fixture layout: single-row-group parquet -> fans out
-        T._SCAN_SPLITS_MEMO.pop(key, None)
+        memo.pop(key, None)
         fanned = df.transform(T.fan_out_scan(SF_DIR, "documents", "doc_id"))
-        assert T._SCAN_SPLITS_MEMO[key] < dp  # memo filled by the gate
+        assert memo[key] < dp  # memo filled by the gate
         plan = _plan_of(spark, fanned)
         assert re.search(r"hashpartitioning\(doc_id#\d+L, \d+\), REPARTITION_BY_NUM", plan)
         # production layout (simulated): splits >= cores -> pass-through
-        T._SCAN_SPLITS_MEMO[key] = dp
+        memo[key] = dp
         passed = df.transform(T.fan_out_scan(SF_DIR, "documents", "doc_id"))
         assert passed is df
     finally:
         if saved is None:
-            T._SCAN_SPLITS_MEMO.pop(key, None)
+            memo.pop(key, None)
         else:
-            T._SCAN_SPLITS_MEMO[key] = saved
+            memo[key] = saved
