@@ -22,12 +22,8 @@ from __future__ import annotations
 
 from pyspark import SparkContext
 
-from polkadot_etl_spark.memo import context_memo
+from polkadot_etl_spark.memo import memoize
 
 
 def expr_cache(key, build):
-    memo = context_memo(SparkContext._active_spark_context, "expr")
-    got = memo.get(key)
-    if got is None:
-        got = memo[key] = build()
-    return got
+    return memoize(SparkContext._active_spark_context, "expr", key, build)

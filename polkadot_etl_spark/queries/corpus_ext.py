@@ -18,6 +18,8 @@ digram keys, never raw text.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -30,6 +32,7 @@ from polkadot_etl_spark.operators.srp import (
 from polkadot_etl_spark.queries.llmdata import _DUCK_BUCKET as _LSH_DUCK_BUCKET
 from polkadot_etl_spark.queries.llmdata import _sq_norm as _sqn
 from polkadot_etl_spark.queries.registry import QUERIES, query
+from polkadot_etl_spark.session import overlap
 from polkadot_etl_spark.sources.tables import fan_out_scan, load_table, local_frame
 
 SEMDEDUP_K = 45  # k-means cells ~ sqrt(N) (seeded, like ivf_centroid_update)
@@ -43,6 +46,12 @@ _DOT = (
 )
 _QN = "list_sum(list_transform(range(1, len(q_emb) + 1), i -> q_emb[i]::DOUBLE * q_emb[i]::DOUBLE))"
 _CN = "list_sum(list_transform(range(1, len(c_emb) + 1), i -> c_emb[i]::DOUBLE * c_emb[i]::DOUBLE))"
+
+
+def _words():
+    """``text``'s lowercase ``[a-z]+`` word tokens, in order (the oracle
+    SQL's ``regexp_extract_all(lower(text), '[a-z]+')``)."""
+    return F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
 
 
 def _assigned_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,7 +424,7 @@ FROM documents d LEFT JOIN perdoc p ON p.doc_id = d.doc_id
 )
 def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    words = _words()
     wb = (
         d.transform(fan_out_scan(sf_dir, "documents", "doc_id"))
         .select("doc_id", "lang", F.explode(words).alias("w"))
@@ -626,7 +635,7 @@ SELECT pair, n_occurrences, rn FROM r WHERE rn <= 50
 )
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    words = _words()
     ex = (
         d.transform(fan_out_scan(sf_dir, "documents", "doc_id"))
         .select(F.explode(words).alias("w"))
@@ -731,7 +740,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     bpe_fertility_audit (which scores the FINAL segmentation the loop
     produced against per-source word streams)."""
     d = load_table(spark, sf_dir, "documents")
-    words = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    words = _words()
     vocab = (
         d.transform(fan_out_scan(sf_dir, "documents", "doc_id"))
         .select(F.explode(words).alias("w"))
@@ -856,7 +865,7 @@ FROM documents d LEFT JOIN perdoc p ON p.doc_id = d.doc_id
 )
 def unigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    words = _words()
     wd = d.transform(fan_out_scan(sf_dir, "documents", "doc_id")).select(
         "doc_id", F.explode(words).alias("w")
     )
@@ -969,7 +978,7 @@ FROM documents d LEFT JOIN perdoc p ON p.doc_id = d.doc_id
 )
 def bigram_perplexity_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    words = _words()
     dws = d.transform(fan_out_scan(sf_dir, "documents", "doc_id")).select(
         "doc_id", "source", words.alias("ws")
     )
@@ -1361,7 +1370,7 @@ FROM d WHERE len(ws) > 0
 )
 def quality_classifier_logit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    ws = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    ws = _words()
     z10 = F.expr(
         "aggregate(regexp_extract_all(lower(text), '[a-z]+', 0), 0L,"
         " (acc, w) -> acc + ((cast(conv(substring(md5(w), 1, 4), 16, 10) as int)"
@@ -1412,7 +1421,7 @@ FROM g
 )
 def intradoc_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    ws = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    ws = _words()
     # stage the word array in its OWN projection: referencing the regexp
     # subtree inside the transform lambda would re-run it per element
     # (the Generate/codegen-CSE pitfall in README "measured pitfalls")
@@ -1799,10 +1808,7 @@ def exact_substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         load_table(spark, sf_dir, "documents")
         .transform(fan_out_scan(sf_dir, "documents", "doc_id"))
-        .select(
-            "doc_id",
-            F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)").alias("ws"),
-        )
+        .select("doc_id", _words().alias("ws"))
     )
     W = SUBSTR_W
     g = (
@@ -2419,7 +2425,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain (single-split fixture scan; keyed, no payload pre-sort)
     d = load_table(spark, sf_dir, "documents").transform(fan_out_scan(sf_dir, "documents", "doc_id"))
     K, W = WINNOW_K, WINNOW_W
-    words = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    words = _words()
     grams = F.expr(
         f"transform(sequence(1, size(__w) - {K} + 1),"
         f" i -> substring(md5(array_join(slice(__w, i, {K}), ' ')), 1, 16))"
@@ -2960,26 +2966,11 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate frame is checkpointed once (bounded at any corpus size)
     # r13 (guide §2.6): the two eager legs — the kmeans training loop's
     # per-round driver actions and the sketch scan's checkpoint — are
-    # independent; submitting them from two driver threads lets the
-    # scheduler back-fill each leg's task tails with the other's tasks
-    # instead of running the legs strictly back to back.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_ivf = pool.submit(
-            inheritable_thread_target(_ivf_trained_parts), spark, sf_dir
-        )
-        f_sk = pool.submit(
-            inheritable_thread_target(
-                lambda: _sketch_prefiltered(spark, sf_dir).localCheckpoint(
-                    eager=True
-                )
-            )
-        )
-        assigned, probed, n_iter = f_ivf.result()
-        sk_cand = f_sk.result()
+    # independent, so they overlap.
+    (assigned, probed, n_iter), sk_cand = overlap(
+        lambda: _ivf_trained_parts(spark, sf_dir),
+        lambda: _sketch_prefiltered(spark, sf_dir).localCheckpoint(eager=True),
+    )
     ivf = _ivf_rerank(spark, sf_dir, assigned, probed, n_iter).select(
         F.col("query_id").alias("q_id"), F.col("neighbor_id").alias("c_id")
     )
@@ -3331,24 +3322,13 @@ def _release_stage_parts(
         # audit) the two expensive independent legs overlap — the
         # near-dup gate's BUILD is eager (the CC driver loop inside
         # dedup_corpus_survivors) while the decontamination flag frame
-        # is a self-contained (doc_id, contaminated) dim, so one driver
-        # thread materializes its checkpoint while the other runs the
-        # CC rounds and the scheduler back-fills each leg's task tails.
-        # Single-stage builds (bench attribution via ``only``) keep the
-        # plain un-checkpointed plans.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_near = pool.submit(inheritable_thread_target(_near))
-            f_cont = pool.submit(
-                inheritable_thread_target(
-                    lambda: _contam().localCheckpoint(eager=True)
-                )
-            )
-            parts["lsh_near_dedup"] = f_near.result()
-            parts["decontamination"] = f_cont.result()
+        # is a self-contained (doc_id, contaminated) dim, checkpointed
+        # while the other leg runs the CC rounds. Single-stage builds
+        # (bench attribution via ``only``) keep the plain
+        # un-checkpointed plans.
+        parts["lsh_near_dedup"], parts["decontamination"] = overlap(
+            _near, lambda: _contam().localCheckpoint(eager=True)
+        )
         return parts
     if want("lsh_near_dedup"):
         parts["lsh_near_dedup"] = _near()
@@ -5875,10 +5855,7 @@ FROM merged m LEFT JOIN ones o USING (source)
 def bpe_fertility_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     _merges, seg = _bpe_train(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
-    wd = d.select(
-        "source",
-        F.explode(F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).alias("w"),
-    )
+    wd = d.select("source", F.explode(_words()).alias("w"))
     syms = seg.select(
         "w", F.size(F.split(F.trim("seg"), "  ")).cast("long").alias("nsym")
     )
@@ -6475,27 +6452,13 @@ JOIN ncand n ON n.query_id = c.query_id
 )
 def hybrid_fusion_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.6): the BM25 leg and the sketch prefilter are
-    # independent eager checkpoints — overlap them from two driver
-    # threads so neither leg's task tail idles the other.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_bm = pool.submit(
-            inheritable_thread_target(
-                lambda: _rrf_bm_leg(spark, sf_dir).localCheckpoint(eager=True)
-            )
-        )
-        f_cand = pool.submit(
-            inheritable_thread_target(
-                lambda: _sketch_prefiltered(spark, sf_dir)
-                .where(F.col("q_id") < RRF_QUERIES)
-                .localCheckpoint(eager=True)
-            )
-        )
-        bm = f_bm.result()
-        cand = f_cand.result()
+    # independent eager checkpoints, so they overlap.
+    bm, cand = overlap(
+        lambda: _rrf_bm_leg(spark, sf_dir).localCheckpoint(eager=True),
+        lambda: _sketch_prefiltered(spark, sf_dir)
+        .where(F.col("q_id") < RRF_QUERIES)
+        .localCheckpoint(eager=True),
+    )
     sk_leg = _sketch_rerank(spark, sf_dir, cand, topk=RRF_OUT).select(
         F.col("q_id").alias("query_id"),
         F.col("c_id").alias("item_id"),
@@ -6639,9 +6602,6 @@ FROM canon
     tags=("streaming", "corpus"),
 )
 def streaming_corpus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from polkadot_etl_spark.streaming.corpus import (
         DEDUP_OUT_SCHEMA,
         dedup_first_occurrence,
@@ -6650,8 +6610,9 @@ def streaming_corpus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from polkadot_etl_spark.streaming.replay import collect_bounded_stream
 
-    work = _tempfile.mkdtemp(prefix="corpus_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="corpus_replay_", ignore_cleanup_errors=True
+    ) as work:
         src_dir = _replay_ndjson_batches(spark, sf_dir, work)
         # builder form (r14): the harness sizes state partitions in a
         # CLONED session, so the stream plans against the sized conf
@@ -6665,8 +6626,6 @@ def streaming_corpus_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             n_rows=REPLAY_DOCS,
         )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(pdf, DEDUP_OUT_SCHEMA)
 
 
@@ -6750,9 +6709,6 @@ FROM verd WHERE rn = 1
     tags=("streaming", "dedup"),
 )
 def streaming_neardedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from polkadot_etl_spark.streaming.corpus import document_stream
     from polkadot_etl_spark.streaming.neardedup import (
         BAND_OUT_SCHEMA,
@@ -6761,8 +6717,9 @@ def streaming_neardedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from polkadot_etl_spark.streaming.replay import collect_bounded_stream
 
-    work = _tempfile.mkdtemp(prefix="neardedup_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="neardedup_replay_", ignore_cleanup_errors=True
+    ) as work:
         src_dir = _replay_ndjson_batches(spark, sf_dir, work)
         # the REAL source stage (shared with streaming_corpus_replay) —
         # an inline copy would silently drift from the machine this
@@ -6776,8 +6733,6 @@ def streaming_neardedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             n_rows=REPLAY_DOCS,  # sized state partitions via cloned session
         )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
     # pandas renders the nullable matched_id as float NaN, which the
     # row verifier (local_frame's, the list path's) rejects for LongType
     # (and the Int64 extension dtype hits the same path) — convert
@@ -8369,9 +8324,6 @@ def _incr_stream_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState first-occurrence dedup; maxFilesPerTrigger=1
     so every wave is its own micro-batch and the state seam is
     exercised). Returns the collected stream output as a local frame."""
-    import shutil as _shutil
-    import tempfile as _tempfile
-
     from polkadot_etl_spark.streaming.corpus import (
         DEDUP_OUT_SCHEMA,
         dedup_first_occurrence,
@@ -8415,8 +8367,9 @@ def _incr_stream_output(spark: SparkSession, sf_dir: str) -> DataFrame:
             if r["doc_id"] % INCR_MIRROR_MOD == INCR_MIRROR_REM
         ]
     )
-    work = _tempfile.mkdtemp(prefix="incr_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="incr_replay_", ignore_cleanup_errors=True
+    ) as work:
         src_dir = write_ndjson_waves(work, waves)
         # builder form (r14): state partitions sized in a CLONED session
         # — load-bearing for THIS query, whose quantizer-training leg
@@ -8431,8 +8384,6 @@ def _incr_stream_output(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             n_rows=sum(len(w) for w in waves),
         )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
     return spark.createDataFrame(pdf, DEDUP_OUT_SCHEMA)
 
 
@@ -8616,10 +8567,6 @@ FROM drift d CROSS JOIN fun
     tags=("streaming", "corpus", "dedup", "similarity", "pipeline"),
 )
 def corpus_daily_increment_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     from polkadot_etl_spark.operators.kmeans import assign_nearest
 
     e = load_table(spark, sf_dir, "embeddings").where(F.col("vec_id") < INCR_DOCS)
@@ -8639,10 +8586,9 @@ def corpus_daily_increment_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     # side quantizer training are INDEPENDENT legs: the stream carries
     # only src>=INCR_MIN_SRC docs while training reads the standing
     # (src<INCR_MIN_SRC) complement, so the kept and standing row sets
-    # are disjoint by construction. r13 (guide §2.6): run the stream
+    # are disjoint by construction. r13 (guide §2.6): the stream
     # harness (a driver-blocking micro-batch loop) and the Lloyd
-    # training rounds from two driver threads so the box is never idle
-    # waiting on one of them.
+    # training rounds overlap.
     def _stream_leg():
         sdf = _incr_stream_output(spark, sf_dir)
         cls = _incr_classified(spark, sf_dir, sdf)
@@ -8663,11 +8609,9 @@ def corpus_daily_increment_replay(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         return _ivf_train_canon(qd_std)
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_stream = pool.submit(inheritable_thread_target(_stream_leg))
-        f_train = pool.submit(inheritable_thread_target(_train_leg))
-        cls, fun_row = f_stream.result()
-        assigned, centroids, canon_col, _n_iter = f_train.result()
+    (cls, fun_row), (assigned, centroids, canon_col, _n_iter) = overlap(
+        _stream_leg, _train_leg
+    )
 
     # ---- stage 3: admit the kept docs' embeddings to the trained index
     # (the SHARED maintenance machinery; membership = the kept set,
@@ -9041,7 +8985,7 @@ JOIN (SELECT source, SUM(n) // {DOREMI_STEPS} AS a FROM norm GROUP BY source) av
 )
 def mixture_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    words = _words()
     wd = d.transform(fan_out_scan(sf_dir, "documents", "doc_id")).select(
         "source", F.explode(words).alias("w")
     )
@@ -9229,7 +9173,7 @@ FROM d CROSS JOIN t GROUP BY threshold_tenths
 )
 def filter_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    ws = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    ws = _words()
     z10 = F.expr(
         "aggregate(regexp_extract_all(lower(text), '[a-z]+', 0), 0L,"
         " (acc, w) -> acc + ((cast(conv(substring(md5(w), 1, 4), 16, 10) as int)"
@@ -9330,7 +9274,7 @@ FROM tok JOIN voc ON voc.octile = tok.octile
 )
 def heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    ws = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    ws = _words()
     base = d.select("doc_id", ws.alias("ws"))
     n_docs = base.count()  # one scalar: the octile thresholds
     thr = [
@@ -9564,9 +9508,7 @@ FROM v WHERE n_inter * 1000000 // n_union >= {SNM_MIN_PPM}
 )
 def sorted_neighborhood_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    vocab = F.array_sort(
-        F.array_distinct(F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
-    )
+    vocab = F.array_sort(F.array_distinct(_words()))
     k = (
         d.select("doc_id", vocab.alias("vocab"))
         .where(F.size("vocab") > 0)
@@ -9633,9 +9575,7 @@ def _snm_verified_legs(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     snm_multipass_dedup (which adds per-pass attribution) and
     dedup_family_venn (which takes the union as one family)."""
     d = load_table(spark, sf_dir, "documents")
-    vocab = F.array_sort(
-        F.array_distinct(F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)"))
-    )
+    vocab = F.array_sort(F.array_distinct(_words()))
     base = d.select("doc_id", vocab.alias("vocab")).where(F.size("vocab") > 0)
     keys = {
         1: F.array_join(F.slice(F.col("vocab"), 1, SNM_KEY_WORDS), " "),
@@ -9662,18 +9602,8 @@ def _snm_verified_legs(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     # r13 (guide §2.6): each pass's build does eager work (the
     # boundary-pinning range-sort checkpoint + the partition-count
     # collect inside _snm_neighbor_pairs); the two passes are
-    # independent, so build them from two driver threads and let the
-    # scheduler overlap their jobs.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(inheritable_thread_target(_leg), pass_no, key)
-            for pass_no, key in keys.items()
-        ]
-        return [f.result() for f in futs]
+    # independent, so they overlap.
+    return overlap(lambda: _leg(1, keys[1]), lambda: _leg(2, keys[2]))
 
 
 @query(
@@ -9865,9 +9795,7 @@ FROM agg LEFT JOIN ffd ON ffd.source = agg.source
 def pack_bins_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap = PACK_CAP
     d = load_table(spark, sf_dir, "documents")
-    n = F.size(F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).cast(
-        "long"
-    )
+    n = F.size(_words()).cast("long")
     base = d.select(
         "source",
         "doc_id",
@@ -10062,7 +9990,7 @@ def mmc4_interleaved_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polkadot_etl_spark.multimodal.codecs import decode_png, encode_png
 
     d = load_table(spark, sf_dir, "documents")
-    ws = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    ws = _words()
     base = (
         d.select("doc_id", ws.alias("ws"))
         .where(F.size("ws") > 0)
@@ -10281,7 +10209,7 @@ FROM perdoc
 )
 def rholoss_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    words = F.expr("regexp_extract_all(lower(text), '[a-z]+', 0)")
+    words = _words()
     wd = d.transform(fan_out_scan(sf_dir, "documents", "doc_id")).select(
         "doc_id", "source", F.explode(words).alias("w")
     )
@@ -10515,22 +10443,15 @@ def dedup_family_venn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.6): the three family legs are fully independent —
     # the SNM legs already build eagerly (range-sort checkpoints +
     # partition-count collects), while the LSH and gram legs were lazy
-    # and evaluated strictly AFTER them in the final action. Checkpoint
-    # each leg's bounded pair frame from its own driver thread so the
-    # scheduler interleaves all three candidate generations; the final
-    # plan is then two small pair-keyed aggregates over the
-    # checkpointed frames.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    def _ck(build):
-        return lambda: build().localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(inheritable_thread_target(_ck(b)))
-                for b in (_lsh, _snm, _gram)]
-        lsh, snm, gram = [f.result() for f in futs]
+    # and evaluated strictly AFTER them in the final action. Each leg's
+    # bounded pair frame is checkpointed in an overlapped leg so all
+    # three candidate generations interleave; the final plan is then
+    # two small pair-keyed aggregates over the checkpointed frames.
+    lsh, snm, gram = overlap(
+        lambda: _lsh().localCheckpoint(eager=True),
+        lambda: _snm().localCheckpoint(eager=True),
+        lambda: _gram().localCheckpoint(eager=True),
+    )
     u = lsh.unionByName(snm).unionByName(gram)
     flags = u.groupBy("doc_a", "doc_b").agg(
         (F.max(F.when(F.col("fam") == "lsh", 1).otherwise(0)) == 1).alias(

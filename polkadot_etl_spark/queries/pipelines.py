@@ -9,6 +9,8 @@ test of the pipeline composition, not of the synthetic generator.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -2890,8 +2892,6 @@ FROM merged GROUP BY 1
     tags=("pipeline", "merge"),
 )
 def merge_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from polkadot_etl_spark.operators.merge import upsert_day_partitioned
 
     e = load_table(spark, sf_dir, "events")
@@ -2901,14 +2901,18 @@ def merge_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     upd = e.where((F.col("event_id") >= 512) & (F.col("event_id") < 1024)).select(
         F.col("event_id").alias("k"), "ts", (F.col("value") * 2).alias("value")
     )
-    # child of the fresh temp dir: must NOT exist yet so the first
-    # upsert takes the bootstrap-write path
-    path = tempfile.mkdtemp(prefix="merge_state_") + "/state"
-    upsert_day_partitioned(spark, path, base, keys=["k"], time_col="ts")
-    upsert_day_partitioned(spark, path, upd, keys=["k"], time_col="ts")
-    # replay the same batch: X6 idempotence is part of the hashed result
-    upsert_day_partitioned(spark, path, upd, keys=["k"], time_col="ts")
-    state = spark.read.parquet(path)
+    with tempfile.TemporaryDirectory(
+        prefix="merge_state_", ignore_cleanup_errors=True
+    ) as work:
+        # child of the fresh temp dir: must NOT exist yet so the first
+        # upsert takes the bootstrap-write path
+        path = work + "/state"
+        upsert_day_partitioned(spark, path, base, keys=["k"], time_col="ts")
+        upsert_day_partitioned(spark, path, upd, keys=["k"], time_col="ts")
+        # replay the same batch: X6 idempotence is part of the hashed result
+        upsert_day_partitioned(spark, path, upd, keys=["k"], time_col="ts")
+        # freeze before work is deleted
+        state = spark.read.parquet(path).localCheckpoint(eager=True)
     return state.groupBy(
         F.col("log_dt").cast("string").alias("log_dt")
     ).agg(
@@ -2949,8 +2953,6 @@ FROM events WHERE event_id < 2000
     tags=("pipeline", "sink"),
 )
 def dune_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     e = load_table(spark, sf_dir, "events").where(F.col("event_id") < 2000)
     payload = F.concat(
         F.lit('{"type":"'),
@@ -2965,18 +2967,24 @@ def dune_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         s_ts("ts").alias("ts_str"),
     )
-    path = tempfile.mkdtemp(prefix="dune_csv_") + "/export"
-    (
-        out.write.option("header", True)
-        .option("escape", '"')  # RFC-4180 doubled quotes, not backslash
-        .csv(path)
-    )
-    return (
-        spark.read.schema("event_id bigint, payload string, value double, ts_str string")
-        .option("header", True)
-        .option("escape", '"')
-        .csv(path)
-    )
+    with tempfile.TemporaryDirectory(
+        prefix="dune_csv_", ignore_cleanup_errors=True
+    ) as work:
+        path = work + "/export"
+        (
+            out.write.option("header", True)
+            .option("escape", '"')  # RFC-4180 doubled quotes, not backslash
+            .csv(path)
+        )
+        return (
+            spark.read.schema(
+                "event_id bigint, payload string, value double, ts_str string"
+            )
+            .option("header", True)
+            .option("escape", '"')
+            .csv(path)
+            .localCheckpoint(eager=True)  # freeze before work is deleted
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -6111,16 +6119,15 @@ def _dump_replay_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute the replay's cost to harness-vs-composition (the funnel
     treatment; r10 verdict task #4)."""
     import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
 
     from polkadot_etl_spark.streaming.pipeline import (
         block_candidates_stream,
         fork_resolving_sink,
     )
 
-    work = _tempfile.mkdtemp(prefix="dump_replay_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="dump_replay_", ignore_cleanup_errors=True
+    ) as work:
         src_dir = _stream_dump_candidates(spark, sf_dir, work)
         state_dir = _os.path.join(work, "state")
         q = (
@@ -6145,10 +6152,8 @@ def _dump_replay_winners(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(state_dir)
             .where(F.col("finalized"))
             .select("number", "hash", "block_time")
-            .localCheckpoint(eager=True)  # freeze before work is rmtree'd
+            .localCheckpoint(eager=True)  # freeze before work is deleted
         )
-    finally:
-        _shutil.rmtree(work, ignore_errors=True)
 
 
 def _dump_replay_gold(

@@ -17,7 +17,9 @@ settings differ (pass ``shuffle_partitions`` sized ~2-3x total cores).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -82,3 +84,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def overlap(*thunks):
+    """Run independent zero-argument thunks concurrently and return their
+    results in argument order.
+
+    Builders use this for eager legs that do not depend on each other
+    (localCheckpoints, driver-side k-means/CC loops, stream runs):
+    submitted from separate driver threads, the legs' jobs share the
+    scheduler, which back-fills one leg's task tail with the other's
+    tasks instead of running the legs strictly back to back. Each thunk
+    gets its own pool thread and is wrapped by
+    ``inheritable_thread_target`` here, on the caller's thread, so the
+    caller's local properties (job group, description) reach the legs'
+    jobs. Every leg is waited for; if any fail, the first failure in
+    argument order is re-raised."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futs = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+    return [f.result() for f in futs]

@@ -21,7 +21,7 @@ from pyspark.sql.types import (
     _make_type_verifier,
 )
 
-from polkadot_etl_spark.memo import context_memo
+from polkadot_etl_spark.memo import memoize
 
 TABLES = (
     "region",
@@ -46,7 +46,7 @@ TABLES = (
 # plan machinery, not result caching — every query still assembles,
 # analyzes and EXECUTES its own plan from the parquet files on disk
 # (nothing row-shaped is retained; the first build in any fresh JVM
-# pays full price). Keyed per live SparkSession (its ``context_memo``,
+# pays full price). Keyed per live SparkSession (``memoize`` in
 # polkadot_etl_spark/memo.py — a closed session's frames are never served
 # to a new one, even one that recycles its id()) + path.
 
@@ -76,24 +76,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       ``USING`` (or alias each side), never ``df1[c] == df2[c]``, which
       is an ambiguous self-join condition on one plan fragment."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    memo = context_memo(spark, "scan")
-    key = (sf_dir, name)
-    df = memo.get(key)
-    if df is not None:
-        return df
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":  # nanos-long → micros timestamp (lossless)
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_type != "timestamp":  # timestamp_ntz → session-TZ (UTC) instant
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        df = df.select("event_id", "ts", "user_id", "event_type", "value", "props")
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    memo[key] = df
-    return df
+    return memoize(
+        spark, "scan", (sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    if name != "events":
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    ts_type = dict(df.dtypes)["ts"]
+    if ts_type == "bigint":  # nanos-long → micros timestamp (lossless)
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    elif ts_type != "timestamp":  # timestamp_ntz → session-TZ (UTC) instant
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df.select("event_id", "ts", "user_id", "event_type", "value", "props")
 
 
 def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
@@ -135,11 +133,12 @@ def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
     (SparkContext, path) — one .rdd planning round trip per table per
     JVM (no job runs; split packing is decided at planning time from
     file sizes and maxPartitionBytes/openCostInBytes)."""
-    memo = context_memo(spark.sparkContext, "scan_splits")
-    n = memo.get((sf_dir, name))
-    if n is None:
-        n = memo[(sf_dir, name)] = load_table(spark, sf_dir, name).rdd.getNumPartitions()
-    return n
+    return memoize(
+        spark.sparkContext,
+        "scan_splits",
+        (sf_dir, name),
+        lambda: load_table(spark, sf_dir, name).rdd.getNumPartitions(),
+    )
 
 
 def fan_out_scan(sf_dir: str, name: str, *keys):
