@@ -29,7 +29,9 @@ from polkadot_etl_spark.operators.srp import (
     srp_signs,
     srp_words_expr,
 )
+from polkadot_etl_spark.operators.minhash import bucket_pairs
 from polkadot_etl_spark.queries.llmdata import _DUCK_BUCKET as _LSH_DUCK_BUCKET
+from polkadot_etl_spark.queries.llmdata import _DUCK_JACCARD_EDGES, _split_col
 from polkadot_etl_spark.queries.llmdata import _sq_norm as _sqn
 from polkadot_etl_spark.queries.registry import QUERIES, query
 from polkadot_etl_spark.session import overlap
@@ -197,55 +199,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # End-to-end fuzzy dedup: LSH candidates -> Jaccard verify -> components
 # -> per-doc keep decision (the corpus a training run would actually read)
 # --------------------------------------------------------------------------
-
-_DUCK_JACCARD_EDGES = """
-sh AS (
-  SELECT doc_id, UNNEST(list_transform(range(1, greatest(len(lower(text)) - 4, 1) + 1),
-                        i -> substr(lower(text), i, 5))) AS shingle
-  FROM documents
-),
-hs AS (SELECT doc_id, md5(shingle) AS h FROM sh),
-mins AS (
-  SELECT doc_id,
-         MIN(substr(h, 1, 8)) AS m0, MIN(substr(h, 9, 8)) AS m1,
-         MIN(substr(h, 17, 8)) AS m2, MIN(substr(h, 25, 8)) AS m3
-  FROM hs GROUP BY doc_id
-),
-sig AS (
-  SELECT doc_id, band,
-         CASE WHEN band = 0 THEN m0 WHEN band = 1 THEN m1
-              WHEN band = 2 THEN m2 ELSE m3 END AS minhash
-  FROM mins CROSS JOIN (SELECT UNNEST(range(0, 4)) AS band) bands
-),
-sized AS (
-  SELECT doc_id, band, minhash,
-         COUNT(*) OVER (PARTITION BY band, minhash) AS bucket_size
-  FROM sig
-),
-capped AS (SELECT * FROM sized WHERE bucket_size <= 64),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM capped a JOIN capped b
-    ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id
-),
-dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-  FROM cand c
-  JOIN dsh x ON x.doc_id = c.doc_a
-  JOIN dsh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
-  GROUP BY c.doc_a, c.doc_b
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM dsh GROUP BY doc_id),
-jedges AS (
-  SELECT i.doc_a, i.doc_b
-  FROM inter i
-  JOIN sizes sa ON sa.doc_id = i.doc_a
-  JOIN sizes sb ON sb.doc_id = i.doc_b
-  WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.5
-)
-"""
-
 
 @query(
     "dedup_corpus_survivors",
@@ -1099,8 +1052,7 @@ GROUP BY ev.split
 )
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    h2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    split = F.when(h2 < "cc", "train").when(h2 < "e6", "val").otherwise("test")
+    split = _split_col()
     words = F.split(F.col("text"), " ")
     grams = F.when(
         F.size(words) >= 5,
@@ -3238,7 +3190,7 @@ def _release_stage_parts(
     construction to the named parts — the near-dup gate does its CC
     work EAGERLY at build time (lineage-cut checkpoints), so bench
     stage attribution must be able to build one gate at a time."""
-    from polkadot_etl_spark.queries.llmdata import _split_col, _word_grams
+    from polkadot_etl_spark.queries.llmdata import _word_grams
 
     def want(name: str) -> bool:
         return only is None or name in only
@@ -5036,7 +4988,7 @@ def rag_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sentence-extraction regex on the punctuated text — the pii_scrub
     # synthesize-then-exercise precedent
     # operate on a STAGED words column — split(text) inside the lambda
-    # would re-evaluate per element (the _spark_shingles O(len^2) rule)
+    # would re-evaluate per element (the minhash.shingles O(len^2) rule)
     punct = (
         "array_join(transform(sequence(1, size(words)),"
         " i -> if(i % (case when doc_id % 17 = 0 then 40"
@@ -10277,38 +10229,8 @@ VENN_GRAM_MIN = 3  # pairs sharing >= this many distinct word-5-grams
 VENN_GRAM_CAP = 64  # grams in more docs are stopword-like (LSH's cap rule)
 
 
-def _venn_oracle() -> str:
-    from polkadot_etl_spark.queries.llmdata import _DUCK_SIG, BUCKET_CAP
-
-    return f"""
-WITH {_DUCK_SIG},
-sized AS (
-  SELECT doc_id, band, minhash,
-         COUNT(*) OVER (PARTITION BY band, minhash) AS bucket_size
-  FROM sig
-),
-capped AS (SELECT * FROM sized WHERE bucket_size <= {BUCKET_CAP}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM capped a JOIN capped b
-    ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id
-),
-dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-  FROM cand c
-  JOIN dsh x ON x.doc_id = c.doc_a
-  JOIN dsh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
-  GROUP BY c.doc_a, c.doc_b
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM dsh GROUP BY doc_id),
-lshp AS (
-  SELECT i.doc_a, i.doc_b
-  FROM inter i
-  JOIN sizes sa ON sa.doc_id = i.doc_a
-  JOIN sizes sb ON sb.doc_id = i.doc_b
-  WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.5
-),
+_VENN_ORACLE = f"""
+WITH {_DUCK_JACCARD_EDGES},
 snmd AS (
   SELECT doc_id, list_sort(list_distinct(
            regexp_extract_all(lower(text), '[a-z]+'))) AS vocab
@@ -10346,7 +10268,7 @@ gp AS (
   HAVING COUNT(*) >= {VENN_GRAM_MIN}
 ),
 fam AS (
-  SELECT 'lsh' AS fam, doc_a, doc_b FROM lshp
+  SELECT 'lsh' AS fam, doc_a, doc_b FROM jedges
   UNION ALL SELECT 'snm', doc_a, doc_b FROM snmp
   UNION ALL SELECT 'gram', doc_a, doc_b FROM gp
 ),
@@ -10364,7 +10286,7 @@ FROM flags GROUP BY in_lsh, in_snm, in_gram
 
 @query(
     "dedup_family_venn",
-    oracle=_venn_oracle(),
+    oracle=_VENN_ORACLE,
     doc="Dedup-family attribution Venn — gate_attribution_audit's "
     "discipline applied to CANDIDATE GENERATION: the three text-side "
     "near-dup families each produce their verified pair set over the "
@@ -10419,22 +10341,9 @@ def dedup_family_venn(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.md5("g").alias("gh"))
             .dropDuplicates()
         )
-        buckets = (
-            gs.groupBy("gh")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-            .where((F.size("ids") >= 2) & (F.size("ids") <= VENN_GRAM_CAP))
-        )
         return (
-            buckets.select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ids, (a, i) ->"
-                        " transform(slice(ids, i + 2, size(ids) - i - 1),"
-                        " b -> struct(a as doc_a, b as doc_b))))"
-                    )
-                ).alias("p")
-            )
-            .groupBy("p.doc_a", "p.doc_b")
+            bucket_pairs(gs, ("gh",), cap=VENN_GRAM_CAP)
+            .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("shared"))
             .where(F.col("shared") >= VENN_GRAM_MIN)
             .select("doc_a", "doc_b", F.lit("gram").alias("fam"))

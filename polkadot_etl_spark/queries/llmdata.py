@@ -11,11 +11,12 @@ left-to-right in both engines (bit-identical doubles) and are rounded
 before ranking.
 
 Scale design (100 TB): every operator here is a shuffle-bounded
-DataFrame plan — shingle explosion is map-side (no shuffle), signatures
-shuffle once on doc_id, LSH candidate generation joins on (band, minhash)
-buckets with an explicit bucket-size cap (mega-buckets are stopword-like
-noise and would otherwise produce quadratic pairs), and ANN's scale path
-joins on sign-buckets instead of cross-joining.
+DataFrame plan — shingling and MinHash signatures are map-side array
+projections (their only exchange is the scan's fan-out repartition), LSH
+candidate generation groups (band, minhash) buckets with an explicit
+bucket-size cap (mega-buckets are stopword-like noise and would otherwise
+produce quadratic pairs; the pieces live in operators/minhash.py), and
+ANN's scale path joins on sign-buckets instead of cross-joining.
 """
 
 from __future__ import annotations
@@ -24,17 +25,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from polkadot_etl_spark.operators.minhash import (
+    BUCKET_CAP,
+    N_BANDS,
+    SHINGLE,
+    bucket_pairs,
+    jaccard_verify,
+    shingles,
+    signatures,
+)
 from polkadot_etl_spark.queries.registry import QUERIES, query
 from polkadot_etl_spark.sources.tables import fan_out_scan, load_table
-
-N_BANDS = 4  # (b=4, r=1) under operators/lsh_planner's S-curve model:
-# t* = 0.25, recall-leaning (collision prob ~0.94 at Jaccard 0.5) —
-# deliberately paired with the exact-Jaccard verify stage + bucket caps;
-# plan_bands(0.25, 4) recommends exactly this shape (pinned in
-# tests/test_lsh_planner.py)
-SHINGLE = 5
-BUCKET_CAP = 64  # LSH buckets larger than this are skipped (stopword-like)
-
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -65,76 +66,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _spark_shingles(text_col: str = "lt", k: int = SHINGLE):
-    """Array of k-char shingles of ``text_col`` — computed map-side.
-
-    ``text_col`` must be an ALREADY-LOWERCASED staged column (callers
-    select ``F.lower("text").alias("lt")`` first): an expression subtree
-    inside a ``transform`` lambda re-evaluates once per element, so
-    ``lower(text)`` in here would cost O(len^2) per document (measured
-    2.1x on the minhash pipeline at sf0.1 — the same lambda-subtree rule
-    as the Generate pitfall in README "measured pitfalls")."""
-    return F.expr(
-        f"transform(sequence(1, greatest(length({text_col}) - {k - 1}, 1)),"
-        f" i -> substring({text_col}, i, {k}))"
-    )
-
-
 _DUCK_SHINGLES = (
     f"list_transform(range(1, greatest(len(lower(text)) - {SHINGLE - 1}, 1) + 1),"
     f" i -> substr(lower(text), i, {SHINGLE}))"
 )
-
-
-def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per (doc, band): min over shingles of the band's 8-hex-char slice
-    of md5(shingle).
-
-    This is MinHash with N_BANDS hash functions taken as disjoint 32-bit
-    slices of one md5 — ONE digest per shingle instead of one per
-    (shingle, band), and no band-explosion of the shingle stream. The
-    min-hashes are hex strings compared lexicographically (fixed width →
-    identical to numeric order) in both engines.
-    """
-    # Heavy per-doc compute: spread docs across cores first (a compact
-    # parquet file is one split; same rule at 100 TB via
-    # maxPartitionBytes). min over a multiset == min over its distinct
-    # set, so dedupe the shingle array first: ~40% fewer md5s on this
-    # corpus (small vocab → many repeated 5-grams), oracle unchanged.
-    #
-    # r13 optimization (guide §2.4): the per-doc minima are computed
-    # INSIDE the array world — stage one md5 per distinct shingle, then
-    # array_min per 8-hex slice — instead of explode → groupBy(doc_id)
-    # min(string). The old shape shuffled ~1k rows/doc and, because
-    # min(string) has a var-length agg buffer, planned as partial+final
-    # SortAggregate (two full sorts of the exploded shingle stream);
-    # the array form is pure map-side projection: no Generate, no
-    # Exchange, no sort, identical minima (8-hex-char slices compare
-    # lexicographically == numerically).
-    hs = (
-        load_table(spark, sf_dir, "documents")
-        .transform(fan_out_scan(sf_dir, "documents", "doc_id"))
-        .select("doc_id", F.lower("text").alias("lt"))
-        .select(
-            "doc_id",
-            F.transform(
-                F.array_distinct(_spark_shingles()), lambda s: F.md5(s)
-            ).alias("ha"),
-        )
-    )
-    mins = hs.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform("ha", lambda h: F.substring(h, 1 + 8 * b, 8))
-            ).alias(f"m{b}")
-            for b in range(N_BANDS)
-        ],
-    )
-    stack_args = ", ".join(f"{b}, m{b}" for b in range(N_BANDS))
-    return mins.selectExpr("doc_id", f"stack({N_BANDS}, {stack_args}) as (b, minhash)").select(
-        "doc_id", F.col("b").cast("bigint").alias("band"), "minhash"
-    )
 
 
 _DUCK_SIG = f"""
@@ -156,6 +91,51 @@ sig AS (
 )
 """
 
+# _DUCK_SIG + LSH candidates over capped buckets + exact shingle-set
+# Jaccard verify: jedges(doc_a, doc_b, n_inter, jaccard) holds the
+# verified (>= 0.5) pairs. The oracle of every query that composes
+# dedup_ngram_jaccard's plan reads it, so all of them follow N_BANDS,
+# BUCKET_CAP and SHINGLE.
+_DUCK_JACCARD_EDGES = f"""{_DUCK_SIG},
+sized AS (
+  SELECT doc_id, band, minhash,
+         COUNT(*) OVER (PARTITION BY band, minhash) AS bucket_size
+  FROM sig
+),
+capped AS (SELECT * FROM sized WHERE bucket_size <= {BUCKET_CAP}),
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM capped a JOIN capped b
+    ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id
+),
+dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
+inter AS (
+  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
+  FROM cand c
+  JOIN dsh x ON x.doc_id = c.doc_a
+  JOIN dsh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
+  GROUP BY c.doc_a, c.doc_b
+),
+sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM dsh GROUP BY doc_id),
+jedges AS (
+  SELECT i.doc_a, i.doc_b, i.n_inter,
+         CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) AS jaccard
+  FROM inter i
+  JOIN sizes sa ON sa.doc_id = i.doc_a
+  JOIN sizes sb ON sb.doc_id = i.doc_b
+  WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.5
+)
+"""
+
+
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents, spread across cores before the heavy per-doc shingle
+    work (a compact parquet file is one split; same rule at 100 TB via
+    maxPartitionBytes)."""
+    return load_table(spark, sf_dir, "documents").transform(
+        fan_out_scan(sf_dir, "documents", "doc_id")
+    )
+
 
 @query(
     "dedup_minhash_signatures",
@@ -163,13 +143,16 @@ sig AS (
 WITH {_DUCK_SIG}
 SELECT doc_id, band, minhash FROM sig
 """,
-    doc="MinHash signature computation: per-doc per-band min of salted "
-    "md5 over 5-char shingles. Shingling is map-side (no shuffle); the "
-    "only shuffle is the groupBy(doc_id, band) partial→final min.",
+    doc="MinHash signature computation: per-doc per-band min of an "
+    "8-hex-char slice of md5 over the doc's distinct 5-char shingles "
+    "(one md5 per shingle, one unsalted slice per band). Shingling and "
+    "the minima are map-side array projections; the only exchange is "
+    "the scan's fan-out repartition.",
     tags=("dedup",),
 )
 def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _minhash_signatures(spark, sf_dir)
+    sig = signatures(_documents(spark, sf_dir))
+    return sig.select("doc_id", F.col("band").cast("bigint").alias("band"), "minhash")
 
 
 @query(
@@ -194,7 +177,7 @@ GROUP BY a.doc_id, b.doc_id
 )
 def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _lsh_candidate_pairs(spark, sf_dir)
+        bucket_pairs(signatures(_documents(spark, sf_dir)))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
     )
@@ -224,7 +207,7 @@ FROM bucket GROUP BY band
     tags=("dedup", "metric"),
 )
 def lsh_dropped_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = _minhash_signatures(spark, sf_dir)
+    sig = dedup_minhash_signatures(spark, sf_dir)
     b = sig.groupBy("band", "minhash").agg(F.count(F.lit(1)).alias("bucket_size"))
     dropped = F.col("bucket_size") > BUCKET_CAP
     return b.groupBy("band").agg(
@@ -237,63 +220,11 @@ def lsh_dropped_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row per (band-bucket, unordered doc pair), doc_a < doc_b.
-
-    Plan shape: instead of self-joining the signature table (which makes
-    Spark build the whole shingle→md5→min pipeline TWICE and costs 7
-    exchanges), collect each bucket's doc list in the groupBy(band,
-    minhash) shuffle and explode the pairs map-side — signatures are
-    computed once and the pair blowup never crosses a shuffle boundary.
-    The bucket cap bounds the quadratic term (same predicate as the
-    oracle's COUNT window)."""
-    sig = _minhash_signatures(spark, sf_dir)
-    buckets = (
-        sig.groupBy("band", "minhash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= BUCKET_CAP))
-    )
-    return buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (a, i) ->"
-                " transform(slice(ids, i + 2, size(ids) - i - 1),"
-                " b -> struct(a as doc_a, b as doc_b))))"
-            )
-        ).alias("p")
-    ).select("p.doc_a", "p.doc_b")
-
-
 @query(
     "dedup_ngram_jaccard",
     oracle=f"""
-WITH {_DUCK_SIG},
-sized AS (
-  SELECT doc_id, band, minhash,
-         COUNT(*) OVER (PARTITION BY band, minhash) AS bucket_size
-  FROM sig
-),
-capped AS (SELECT * FROM sized WHERE bucket_size <= {BUCKET_CAP}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM capped a JOIN capped b
-    ON a.band = b.band AND a.minhash = b.minhash AND a.doc_id < b.doc_id
-),
-dsh AS (SELECT DISTINCT doc_id, shingle FROM sh),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-  FROM cand c
-  JOIN dsh x ON x.doc_id = c.doc_a
-  JOIN dsh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
-  GROUP BY c.doc_a, c.doc_b
-),
-sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM dsh GROUP BY doc_id)
-SELECT i.doc_a, i.doc_b, i.n_inter,
-       ROUND(CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter), 6) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.doc_a
-JOIN sizes sb ON sb.doc_id = i.doc_b
-WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.5
+WITH {_DUCK_JACCARD_EDGES}
+SELECT doc_a, doc_b, n_inter, ROUND(jaccard, 6) AS jaccard FROM jedges
 """,
     doc="n-gram Jaccard verification of LSH candidates: exact shingle-set "
     "Jaccard computed ONLY for candidate pairs (never all-pairs), "
@@ -301,40 +232,11 @@ WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) >= 0.5
     tags=("dedup",),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 (guide §2.5/§2.2): same single-task-verify fix as banded_r2 —
-    # the distinct pair frame is narrow enough that AQE coalesces the
-    # downstream stage (the per-pair array_intersect verify against the
-    # broadcast sets) to one task; pin it to the session's parallelism.
-    # dropDuplicates reuses the keyed repartition's hash partitioning.
-    cand = (
-        _lsh_candidate_pairs(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_a", "doc_b")
-        .dropDuplicates()
-    )
-    # per-doc distinct shingle SET as one sorted array: the exact-verify
-    # join then moves one array per doc instead of one row per shingle,
-    # and the intersection is a map-side array_intersect — no
-    # shingle-grain shuffle at all.
-    # same fan-out rule as _minhash_signatures: a compact parquet file is
-    # one split; spread the docs BEFORE the per-doc set build runs.
-    sets_ = (
-        load_table(spark, sf_dir, "documents")
-        .transform(fan_out_scan(sf_dir, "documents", "doc_id"))
-        .select("doc_id", F.lower("text").alias("lt"))
-        .select("doc_id", F.array_distinct(_spark_shingles()).alias("sh_set"))
-        # (r13: no array_sort — array_intersect/size have set semantics
-        # and the arrays never reach the output, so sorting each set was
-        # pure wasted per-doc O(n log n))
-    )
-    sa = sets_.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("set_a"))
-    sb = sets_.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("set_b"))
-    n_inter = F.size(F.array_intersect("set_a", "set_b"))
-    jac = n_inter.cast("double") / (F.size("set_a") + F.size("set_b") - n_inter)
+    docs = _documents(spark, sf_dir)
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .where(jac >= 0.5)  # filter on the UNROUNDED value, like the oracle
-        .select("doc_a", "doc_b", n_inter.alias("n_inter"), F.round(jac, 6).alias("jaccard"))
+        jaccard_verify(bucket_pairs(signatures(docs)), docs)
+        .where(F.col("jaccard") >= 0.5)  # the UNROUNDED value, like the oracle
+        .select("doc_a", "doc_b", "n_inter", F.round("jaccard", 6).alias("jaccard"))
     )
 
 
@@ -419,88 +321,17 @@ JOIN sizes sb ON sb.doc_id = i.doc_b
     tags=("dedup",),
 )
 def dedup_minhash_banded_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    H, B = MINHASH_R2_HASHES, MINHASH_R2_BANDS
-    # r13 optimization (guide §2.4): same array_min restructure as
-    # _minhash_signatures — stage the 64-hex double digest once per
-    # distinct shingle, take the 8 per-doc minima map-side. Removes the
-    # shingle explode, the partial+final SortAggregate pair (min over
-    # var-length strings cannot hash-aggregate) and the doc_id Exchange.
-    hs = (
-        load_table(spark, sf_dir, "documents")
-        .transform(fan_out_scan(sf_dir, "documents", "doc_id"))
-        .select("doc_id", F.lower("text").alias("lt"))
-        .select(
-            "doc_id",
-            F.transform(
-                F.array_distinct(_spark_shingles()),
-                lambda s: F.concat(F.md5(s), F.md5(F.concat(F.lit("b:"), s))),
-            ).alias("ha"),
-        )
+    docs = _documents(spark, sf_dir)
+    sig = signatures(
+        docs, bands=MINHASH_R2_BANDS, rows=MINHASH_R2_HASHES // MINHASH_R2_BANDS
     )
-    mins = hs.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform("ha", lambda h: F.substring(h, 1 + 8 * i, 8))
-            ).alias(f"s{i}")
-            for i in range(H)
-        ],
-    )
-    stack_args = ", ".join(f"{k}, concat(s{2 * k}, s{2 * k + 1})" for k in range(B))
-    sig = mins.selectExpr("doc_id", f"stack({B}, {stack_args}) as (band, bkey)")
-    buckets = (
-        sig.groupBy("band", "bkey")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= BUCKET_CAP))
-    )
-    cand = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) ->"
-                    " transform(slice(ids, i + 2, size(ids) - i - 1),"
-                    " b -> struct(a as doc_a, b as doc_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.doc_a", "p.doc_b")
-        # r13 (guide §2.5/§2.2): pin the pair frame's partition count.
-        # The pairs are ~3 MB of narrow longs, so AQE's byte-sized
-        # coalescing collapses the post-aggregation stage to ONE task —
-        # but that stage is where every candidate pair pays its exact
-        # array_intersect verify against the broadcast shingle sets
-        # (~1.4 ms/pair, measured serial before this). An explicit
-        # keyed repartition (REPARTITION_BY_NUM is never coalesced)
-        # spreads the verify across the session's cores; the groupBy
-        # reuses the same hash partitioning, so no extra exchange.
-        .repartition(spark.sparkContext.defaultParallelism, "doc_a", "doc_b")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    sets_ = (
-        load_table(spark, sf_dir, "documents")
-        .transform(fan_out_scan(sf_dir, "documents", "doc_id"))
-        .select("doc_id", F.lower("text").alias("lt"))
-        .select("doc_id", F.array_distinct(_spark_shingles()).alias("sh_set"))
-        # (r13: no array_sort — array_intersect/size have set semantics
-        # and the arrays never reach the output, so sorting each set was
-        # pure wasted per-doc O(n log n))
-    )
-    sa = sets_.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("set_a"))
-    sb = sets_.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("set_b"))
-    n_inter = F.size(F.array_intersect("set_a", "set_b"))
-    jac = n_inter.cast("double") / (F.size("set_a") + F.size("set_b") - n_inter)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
-            n_inter.cast("bigint").alias("n_inter"),
-            F.round(jac, 6).alias("jaccard"),
-            (jac >= MINHASH_R2_T).alias("kept"),
-        )
+    return jaccard_verify(bucket_pairs(sig), docs).select(
+        "doc_a",
+        "doc_b",
+        F.col("n_shared_bands").cast("bigint").alias("n_shared_bands"),
+        F.col("n_inter").cast("bigint").alias("n_inter"),
+        F.round("jaccard", 6).alias("jaccard"),
+        (F.col("jaccard") >= MINHASH_R2_T).alias("kept"),
     )
 
 
@@ -690,7 +521,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .transform(fan_out_scan(sf_dir, "documents", "doc_id"))
         .select("doc_id", F.lower("text").alias("lt"))
-        .select("doc_id", F.explode(_spark_shingles(k=8)).alias("shingle"))
+        .select("doc_id", F.explode(shingles(k=8)).alias("shingle"))
     )
     return d.groupBy("doc_id").agg(
         F.min(F.md5("shingle")).alias("fingerprint"),
@@ -1225,9 +1056,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _split_col() -> F.Column:
     """Per-doc split assignment (md5 hex-prefix range on doc_id) — the
-    one rule behind train_val_split and corpus_release_funnel's final
-    stage; factored so every consumer runs the identical REAL
-    expression."""
+    one rule behind train_val_split, split_leakage_audit and
+    corpus_release_funnel's final stage; factored so every consumer runs
+    the identical REAL expression."""
     h2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     return F.when(h2 < "cc", "train").when(h2 < "e6", "val").otherwise("test")
 
@@ -1302,13 +1133,13 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = (
         d.where(F.col("doc_id") < 20)
         .select(F.lower("text").alias("lt"))
-        .select(F.explode(_spark_shingles()).alias("shingle"))
+        .select(F.explode(shingles()).alias("shingle"))
         .distinct()
     )
     train = (
         d.where(F.col("doc_id") >= 20)
         .select("doc_id", F.lower("text").alias("lt"))
-        .select("doc_id", F.explode(F.array_distinct(_spark_shingles())).alias("shingle"))
+        .select("doc_id", F.explode(F.array_distinct(shingles())).alias("shingle"))
     )
     return (
         train.join(F.broadcast(bench), "shingle")

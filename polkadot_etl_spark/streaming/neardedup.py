@@ -7,11 +7,9 @@ existing.
 
 Mechanism (the batch r=1 family's shapes made streaming-legal):
 - the 4x32-bit MinHash signature is computed ROW-LOCAL per document
-  (array_min folds over the distinct shingle set) — deliberately NOT
-  the batch family's explode + hash-aggregate shape, because a stream
-  cannot shuffle an aggregation ahead of the stateful operator; this is
-  the one place the interpreted-HOF cost (README pitfall, measured r8)
-  buys something the codegen shape cannot do;
+  (array_min folds over the distinct shingle set), the same minima as
+  operators/minhash.signatures — a stream cannot shuffle an aggregation
+  ahead of the stateful operator, and the row-local form needs none;
 - the doc fans out to its 4 band rows (stateless explode — legal), and
   ``applyInPandasWithState`` keyed on (band, bkey) holds a CAPPED
   roster of (doc_id, signature) per bucket — the BUCKET_CAP discipline:
@@ -42,9 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from polkadot_etl_spark.queries.llmdata import BUCKET_CAP, _spark_shingles
+from polkadot_etl_spark.operators.minhash import BUCKET_CAP, N_BANDS, shingles
 
-N_BANDS = 4
 MIN_AGREE = 2  # >= 2 of 4 slices equal -> near-dup verdict
 
 BAND_OUT_SCHEMA = T.StructType(
@@ -63,14 +60,16 @@ _ROSTER_STATE_SCHEMA = T.StructType([T.StructField("roster", T.StringType(), Tru
 def signed_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, band, bkey, sig): one row per band with its bucket key.
     The signature is the r=1 family's (4 disjoint 8-hex slices of
-    md5-per-shingle minima) computed row-local — streaming-legal. The
-    whole chain lives inside ONE let-bound Generate: CollapseProject
-    would re-inline a staged mins column into the explode's projection
-    and re-evaluate the digest chain per band element (the r7
-    native-codec lesson), so the mins array binds inside the exploded
-    expression instead."""
+    md5-per-shingle minima) computed row-local — streaming-legal. It is
+    not operators/minhash.signatures because the roster matcher needs the
+    whole signature on every band row, where signatures emits only the
+    band's own minhash. The whole chain lives inside ONE let-bound
+    Generate: CollapseProject would re-inline a staged mins column into
+    the explode's projection and re-evaluate the digest chain per band
+    element (the r7 native-codec lesson), so the mins array binds inside
+    the exploded expression instead."""
     staged = docs.select(
-        "doc_id", F.array_distinct(_spark_shingles("lt")).alias("__sh")
+        "doc_id", F.array_distinct(shingles("lt")).alias("__sh")
     )
     mins = "array(" + ", ".join(
         f"array_min(transform(hh, h -> substring(h, {1 + 8 * b}, 8)))"

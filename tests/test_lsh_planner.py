@@ -60,11 +60,11 @@ def test_false_rates_tradeoff_direction():
 
 def test_pins_the_fixture_minhash_configuration():
     """The registry's MinHash queries run N_BANDS=4 with one minhash per
-    band (llmdata.py): under the planner's model that is (b=4, r=1) with
+    band (operators/minhash.py): under the planner's model that is (b=4, r=1) with
     t* = 0.25 — a recall-leaning configuration (collision prob at
     Jaccard 0.5 is ~0.94, at 0.1 still ~0.34), which is why the pipeline
     pairs it with an exact-Jaccard verify stage and bucket caps."""
-    from polkadot_etl_spark.queries.llmdata import N_BANDS
+    from polkadot_etl_spark.operators.minhash import N_BANDS
 
     assert N_BANDS == 4
     assert curve_threshold(N_BANDS, 1) == 0.25

@@ -7,6 +7,10 @@ Usage:
     python tools_profile.py --iters 3 q1
     SPARK_GRAFT_CONF='spark.foo=bar;spark.baz=qux' python tools_profile.py q1
 
+Plan dumps are written with run-specific ids and names replaced by fixed
+tokens (see ``normalize_plan``), so the dumps of two commits compare with
+one ``diff -r``.
+
 Timing uses benchutil.time_noop_min (identical methodology to bench.py)
 at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS], after
 the same warm_session, so numbers here are comparable to BENCH_DETAIL.
@@ -16,8 +20,30 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
+import tempfile
 import time
+
+# (pattern, token): expression ids, plan ids, RDD ids, and the random
+# suffix tempfile gives a scratch directory under the temp root
+_PLAN_NOISE = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (
+        re.compile(re.escape(tempfile.gettempdir()) + r"/([A-Za-z_]*?)[a-z0-9_]{8}\b"),
+        tempfile.gettempdir() + r"/\1XXXXXXXX",
+    ),
+]
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with the ids and names that differ between runs of the
+    same build replaced by fixed tokens."""
+    for pattern, token in _PLAN_NOISE:
+        plan = pattern.sub(token, plan)
+    return plan
 
 
 def main() -> int:
@@ -61,7 +87,7 @@ def main() -> int:
             )
             path = os.path.join(args.explain_dir, f"{name}{args.suffix}.txt")
             with open(path, "w") as fh:
-                fh.write(plan)
+                fh.write(normalize_plan(plan))
             print(f"# {name}: plan -> {path} (build {build_s:.2f}s)")
         if not args.no_time:
             spark.sparkContext.setJobDescription(f"profile: {name}")
